@@ -1,10 +1,9 @@
 package graft.lake
 
-import java.util.UUID
-
+import graft.lake.dsv2.{LakeDataWriter, LakeWriteCommit, LakeWriterFactory}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,43 +25,6 @@ final case class LakeEvent(
   * writes (A5–A9), and parquet footer-metrics harvesting (A18).
   */
 object LakeWriter {
-
-  /** Reentrant, per-session scope for the INT64-µs parquet timestamp conf:
-    * the OUTERMOST enter captures the user's value, every nested/concurrent
-    * enter just counts, and the LAST exit restores — so concurrent
-    * writeDataFiles calls (independent index/data builds overlapped per
-    * guide §2.6) can never capture each other's MICROS as the value to
-    * restore. The lock guards only the conf get/set, never a write.
-    */
-  private object TsScope {
-    private val Key = "spark.sql.parquet.outputTimestampType"
-    private final class State { var depth = 0; var prev: Option[String] = None }
-    private val bySession =
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, State]()
-    def enter(spark: SparkSession): Unit = {
-      val st = bySession.computeIfAbsent(spark, _ => new State)
-      st.synchronized {
-        if (st.depth == 0) {
-          st.prev = spark.conf.getOption(Key)
-          spark.conf.set(Key, "TIMESTAMP_MICROS")
-        }
-        st.depth += 1
-      }
-    }
-    def exit(spark: SparkSession): Unit = {
-      val st = bySession.get(spark)
-      if (st != null) st.synchronized {
-        st.depth -= 1
-        if (st.depth == 0) {
-          st.prev match {
-            case Some(v) => spark.conf.set(Key, v)
-            case None => spark.conf.unset(Key)
-          }
-          bySession.remove(spark)
-        }
-      }
-    }
-  }
 
   /** The reference's single table schema (Constants.java:26-31). */
   val EventSchemaDdl: String =
@@ -109,21 +71,29 @@ object LakeWriter {
   /** Write a DataFrame into the table's data layout (A5–A7): rows land in
     * `data/<col>_trunc=<bucket>/<uuid>.parquet` directories keyed by the
     * truncate transform; returns DataFileMeta with footer-harvested stats.
+    * One write path with the DSv2 sink: each task runs a
+    * [[LakeDataWriter]] over its rows, files go straight
+    * to their final paths, and stats come from each writer's own footer.
     * `filesPerPartition` > 1 emulates the reference's multi-file batches
-    * (A9, Writer.java:126-137).
-    */
-  /** `splitBy` (optional) appends caller-computed columns to the write-
-    * clustering key, letting ONE bucket's rows spread over several write
-    * tasks. Contract: each splitBy column must be a MONOTONE COARSENING of
-    * the leading sort key (e.g. `shiftright(thash, 61)` when sorting by
-    * thash) — tasks then own disjoint sort-key RANGES within a bucket, so
-    * every file still holds a disjoint range and the footer-skip contract
-    * is untouched. Why it exists: bucket-count caps write parallelism —
-    * a 16-bucket index build can never use more than 16 write tasks no
-    * matter the cluster (the d02_phrase_zipf build wrote 4.2 M posting
-    * rows through ~13 effective tasks at 32 cores; at 100 TB the same cap
-    * binds at ANY core count). Routing by __part alone is unchanged —
-    * files land in the same bucket dirs either way.
+    * (A9, Writer.java:126-137): every bucket splits round-robin into that
+    * many files. `maxRecordsPerFile` > 0 rolls a file at that many rows.
+    *
+    * Clustering: rows route by bucket, each task sorts by (bucket,
+    * `sortExprs`, `sortBy`) and holds one bucket open at a time, so at
+    * `filesPerPartition` = 1 a bucket's rolled files carry DISJOINT
+    * sort-key ranges (each file prunes independently via footer stats). `sortExprs`
+    * carries computed keys (e.g. a z-order curve) that order the rows
+    * without being written.
+    *
+    * `splitBy` (optional) appends caller-computed columns to the routing
+    * key, letting ONE bucket's rows spread over several write tasks:
+    * routing becomes a RANGE split on (bucket, splitBy), so each task owns
+    * one contiguous splitBy range per bucket. When every splitBy column is
+    * a MONOTONE COARSENING of the leading sort key (e.g.
+    * `shiftright(thash, 61)` when sorting by thash), the tasks' sort-key
+    * ranges within a bucket are disjoint, so every file's range is. Why
+    * it exists: bucket-count caps write parallelism — a 16-bucket index
+    * build can never use more than 16 write tasks no matter the cluster.
     */
   def writeDataFiles(df: DataFrame, table: LakeTable,
       filesPerPartition: Int = 1, sortBy: Seq[String] = Nil,
@@ -138,135 +108,29 @@ object LakeWriter {
     require(got == expected,
       s"write columns ${got.mkString(",")} != table schema " +
         s"${expected.mkString(",")} — align names to the current schema")
-    val spark = df.sparkSession
     val spec = table.spec
-    val conf = LakeTable.hadoopConf
-    val loc = new Path(table.location)
-    val fs = loc.getFileSystem(conf)
-    val tmpDir = new Path(loc, s"_tmp-write-${UUID.randomUUID()}")
-
-    // INT64 µs timestamps (not Spark's INT96 default): footer stats stay
-    // long-typed and the DSv2 Group reader consumes them directly. Scoped:
-    // restored after the (eager) write so user writes in the same session
-    // keep their configured format. The scope is REENTRANT per session
-    // (TsScope): independent builds may now run writeDataFiles from
-    // concurrent driver threads (guide §2.6 — overlap independent jobs),
-    // and a naive set/restore pair racing another write could capture the
-    // other write's MICROS as "previous" and leak it past both scopes.
-    TsScope.enter(spark)
-    val withPart = df.withColumn("__part",
-      col(spec.column) - pmod(col(spec.column), lit(spec.widthMicros)))
-    val repartitioned =
-      if (filesPerPartition <= 1)
-        // EXPLICIT partition count: AQE treats a keyless
-        // REPARTITION_BY_COL exchange as coalescible and can fold all
-        // populated buckets into ~one task, serializing the per-bucket
-        // sort + parquet encode that follows. Routing is still by
-        // __part alone, so each bucket lands whole in exactly one task
-        // either way — the file count and the per-bucket sort-column
-        // disjointness (footer-skip contract) are unchanged; only the
-        // write-side parallelism is.
-        // r16 adjudication of the r15 pin's suspected tiny-write tax
-        // (VERDICT item 2): same-JVM A/B of this explicit count vs an
-        // AQE-coalescible repartition(col) across d02_ann_indexed_trained,
-        // d03_minhash_index and d01_substring_index read within noise
-        // (3.48 vs 3.41-3.71 s, 2.65 vs 2.58-3.08, 3.57 vs 3.32-3.51) —
-        // the r15 driver regressions were epoch weather, not the pin.
-        // The explicit count stays: it is AQE-proof for the expansion-
-        // built index writes that measurably need the parallelism.
-        withPart.repartition(
-          spark.sessionState.conf.numShufflePartitions,
-          (col("__part") +: splitBy): _*)
-      else withPart.repartition(filesPerPartition, col("__part"),
-        pmod(col("message_id"), lit(filesPerPartition)))
-    // clustering: sort inside each partition task so the writer's
-    // maxRecordsPerFile splits produce files with DISJOINT sort-column
-    // ranges (each file then prunes independently via footer stats);
-    // sortExprs carries computed keys (e.g. a z-order curve) that must
-    // order the rows without being written to the files
-    val keys = sortExprs ++ sortBy.map(col)
-    val clustered =
-      if (keys.isEmpty) repartitioned
-      else repartitioned.sortWithinPartitions((col("__part") +: keys): _*)
-    val writer = clustered.write.partitionBy("__part")
-    val sized =
-      if (maxRecordsPerFile > 0)
-        writer.option("maxRecordsPerFile", maxRecordsPerFile)
-      else writer
-    // declared bloom columns survive rewrites/compaction: the per-column
-    // parquet option rides the datasource write's hadoop conf
-    val bloomed = graft.lake.dsv2.LakeDataWriter.bloomColumnsFor(table)
-      .foldLeft(sized)((w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    try bloomed.parquet(tmpDir.toString)
-    finally TsScope.exit(spark)
-
-    // per-file move + footer harvest through a fixed I/O pool — the
-    // reference hides per-file storage latency behind 8-thread pools
-    // (FileBasedBookkeeper.java:28-29,130-150); on object stores each
-    // rename/footer round-trip is milliseconds, so serializing them makes
-    // the publish step O(files) in LATENCY, not just work
-    val moves = for {
-      partDir <- fs.listStatus(tmpDir).toSeq if partDir.isDirectory
-      partVal = partDir.getPath.getName.stripPrefix("__part=").toLong
-      f <- fs.listStatus(partDir.getPath).toSeq
-      if f.getPath.getName.endsWith(".parquet")
-    } yield (f.getPath, partVal)
-    moves.foreach { case (_, pv) =>
-      fs.mkdirs(new Path(new Path(loc, LakeFormat.DataDir), spec.dirName(pv)))
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, moves.size)))
-    try {
-      val futures = moves.map { case (src, partVal) =>
-        pool.submit(new java.util.concurrent.Callable[DataFileMeta] {
-          override def call(): DataFileMeta = {
-            val destDir = new Path(new Path(loc, LakeFormat.DataDir),
-              spec.dirName(partVal))
-            val dest = new Path(destDir, s"${UUID.randomUUID()}.parquet")
-            // FileSystem instances are cached per-scheme and thread-safe
-            if (!fs.rename(src, dest))
-              throw new java.io.IOException(s"move failed: $src -> $dest")
-            footerMeta(conf, dest, partVal)
-          }
-        })
-      }
-      // await EVERY future before inspecting outcomes, so a failure never
-      // leaves in-flight moves racing the cleanup below
-      val results: Seq[Either[Throwable, DataFileMeta]] = futures.map { f =>
-        try Right(f.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
-          case e: InterruptedException => Left(e)
-        }
-      }
-      results.collectFirst { case Left(e) => e }.foreach { e =>
-        // abort: files already moved to final paths are referenced by no
-        // manifest (the commit only happens after this method returns) —
-        // delete them so a failed publish leaves nothing behind
-        results.foreach {
-          case Right(m) =>
-            try fs.delete(new Path(m.path), false)
-            catch { case _: java.io.IOException => }
-          case _ => ()
-        }
-        throw new java.io.IOException("data-file publish failed; staged files removed", e)
-      }
-      // stamp the schema AND partition-spec vintages the rows were WRITTEN
-      // under (the table's current defs at write time): a rename or width
-      // change committed between this write and its commit still resolves
-      // these files' physical names / bucket widths correctly
-      val sid = table.currentSchemaId
-      val pid = table.currentSpecId
-      results.collect { case Right(m) =>
-        if (sid == 0 && pid == 0) m
-        else m.copy(schemaId = sid, specId = pid) }
-    } finally {
-      pool.shutdown()
-      // staging dir cleanup must run on BOTH paths — a failed future
-      // otherwise leaks the whole temp write
-      try fs.delete(tmpDir, true) catch { case _: java.io.IOException => }
-    }
+    val part = col(spec.column) - pmod(col(spec.column), lit(spec.widthMicros))
+    // EXPLICIT partition count: AQE may coalesce a repartition without
+    // one, folding all populated buckets into ~one task and serializing
+    // the per-bucket sort + parquet encode that follows
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    val routed =
+      if (splitBy.isEmpty) df.repartition(n, part)
+      else df.repartitionByRange(n, (part +: splitBy): _*)
+    val rows = routed.sortWithinPartitions((part +: sortExprs) ++ sortBy.map(col): _*)
+    val files = LakeWriteCommit.writeAll(rows.queryExecution.toRdd,
+      new LakeWriterFactory(table.location, df.schema.toDDL,
+        spec.column, spec.widthMicros, LakeDataWriter.targetFor(table),
+        LakeDataWriter.bloomColumnsFor(table), sequentialBuckets = true,
+        filesPerBucket = filesPerPartition, maxRecordsPerFile = maxRecordsPerFile,
+        // the session's `parquet.block.size` applies, as on Spark's own
+        // parquet writes
+        rowGroupBytes = df.sparkSession.sessionState.newHadoopConf().getLong(
+          ParquetOutputFormat.BLOCK_SIZE, ParquetWriter.DEFAULT_BLOCK_SIZE)))
+    // stamp the schema AND partition-spec vintages the rows were WRITTEN
+    // under: a rename or width change committed between this write and its
+    // commit still resolves these files' physical names / bucket widths
+    LakeWriteCommit.stamp(files, table.currentSchemaId, table.currentSpecId)
   }
 
   /** Parquet footer → DataFileMeta (A18): row count plus per-column stats

@@ -197,7 +197,37 @@ final class LakeWriteBuilder(location: String, info: LogicalWriteInfo,
   }
 }
 
-private[dsv2] object LakeWriteCommit {
+private[lake] object LakeWriteCommit {
+  /** Run `factory`'s task writers over `rows` as one Spark job and return
+    * every task's files — the batch-write shape without a BatchWrite: a
+    * failed task aborts its own writer, a failed job deletes the files of
+    * the tasks that finished.
+    */
+  def writeAll(rows: org.apache.spark.rdd.RDD[InternalRow],
+      factory: DataWriterFactory): Seq[DataFileMeta] = {
+    val done = new Array[WriterCommitMessage](rows.getNumPartitions)
+    try rows.sparkContext.runJob(rows,
+      (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+        val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+        try {
+          it.foreach(r => w.write(r))
+          val m = w.commit()
+          // a job that failed meanwhile drops this result: the task's
+          // files must not outlive it
+          if (ctx.isInterrupted())
+            throw new org.apache.spark.TaskKilledException("write job failed")
+          m
+        } catch { case t: Throwable => w.abort(); throw t }
+        finally w.close()
+      },
+      (i: Int, m: WriterCommitMessage) => done(i) = m)
+    catch { case t: Throwable =>
+      deleteAll(collect(done.filter(_ != null)))
+      throw t
+    }
+    collect(done)
+  }
+
   def collect(messages: Array[WriterCommitMessage]): Seq[DataFileMeta] =
     messages.toSeq.collect {
       case LakeCommitMessage(files) => files
@@ -354,13 +384,16 @@ final class LakeWriterFactory(location: String, schemaDdl: String,
     specColumn: String, specWidth: Long,
     targetBytes: Long = LakeDataWriter.DefaultTargetBytes,
     bloomColumns: Seq[String] = Nil,
-    sequentialBuckets: Boolean = false)
+    sequentialBuckets: Boolean = false,
+    filesPerBucket: Int = 1,
+    maxRecordsPerFile: Long = 0L,
+    rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE)
   extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(location, StructType.fromDDL(schemaDdl),
       TruncateSpec(specColumn, specWidth), targetBytes, bloomColumns,
-      sequentialBuckets)
+      sequentialBuckets, filesPerBucket, maxRecordsPerFile, rowGroupBytes)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -394,9 +427,9 @@ object LakeDataWriter {
 /** One executor task's writer: routes each row to a per-bucket parquet
   * writer (`data/<col>_trunc=<bucket>/<uuid>.parquet`), encoding through
   * Spark's own ParquetWriteSupport — the identical binary layout (INT64 µs
-  * timestamps, footer stats) the table's write path and vectorized reader
-  * already speak. Files are invisible until the driver's manifest commit,
-  * so direct-to-final-path writes are safe; abort deletes them.
+  * timestamps, footer stats) the table's vectorized reader speaks. Files
+  * are invisible until the driver's manifest commit, so direct-to-final-
+  * path writes are safe; abort deletes them.
   *
   * Rolling: once a file's in-flight size crosses `targetBytes`
   * (write.target-file-size-bytes, default 512 MB) it closes and a fresh
@@ -404,16 +437,28 @@ object LakeDataWriter {
   * writes ONE multi-GB file that no byte-range split can decode in
   * parallel row groups fairly, and compaction bin-packing has nothing to
   * work with. Size is polled every [[LakeDataWriter.RollCheckRows]] rows
-  * (getDataSize walks column buffers — too hot for per-row).
+  * of a file (getDataSize walks column buffers — too hot for per-row); a
+  * positive `maxRecordsPerFile` also rolls a file at that many rows.
+  * `filesPerBucket` = n deals a bucket's rows round-robin over n open
+  * files (row ordinal mod n), so each bucket a task sees yields n files
+  * whose row counts differ by at most one.
   */
 final class LakeDataWriter(location: String, schema: StructType,
     spec: TruncateSpec,
     targetBytes: Long = LakeDataWriter.DefaultTargetBytes,
     bloomColumns: Seq[String] = Nil,
-    sequentialBuckets: Boolean = false)
+    sequentialBuckets: Boolean = false,
+    filesPerBucket: Int = 1,
+    maxRecordsPerFile: Long = 0L,
+    rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE)
   extends DataWriter[InternalRow] {
 
   private val partIdx = schema.fieldIndex(spec.column)
+  // writeDataFiles hands over its input's own types: an INT column buckets too
+  private val partValue: InternalRow => Long = schema(partIdx).dataType match {
+    case org.apache.spark.sql.types.IntegerType => _.getInt(partIdx).toLong
+    case _ => _.getLong(partIdx)
+  }
   private val conf: Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val c = new Configuration(LakeTable.hadoopConf)
@@ -425,12 +470,19 @@ final class LakeDataWriter(location: String, schema: StructType,
     c.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
     c
   }
-  private val writers =
-    scala.collection.mutable.LinkedHashMap.empty[Long, (Path, ParquetWriter[InternalRow])]
-  // files already rolled closed this task, in commit-message order
-  private val rolled = Seq.newBuilder[DataFileMeta]
-  private val rowsSinceCheck =
-    scala.collection.mutable.LinkedHashMap.empty[Long, Int]
+
+  private final class OpenFile(val path: Path, val w: ParquetWriter[InternalRow]) {
+    var rows = 0L
+  }
+  /** A bucket's open files (a slot is null until its next row) and the
+    * bucket's row ordinal, which picks the slot. */
+  private final class Bucket {
+    val slots = new Array[OpenFile](math.max(1, filesPerBucket))
+    var ordinal = 0L
+  }
+  private val buckets = scala.collection.mutable.LinkedHashMap.empty[Long, Bucket]
+  // files already closed this task, in commit-message order
+  private val closed = scala.collection.mutable.ArrayBuffer.empty[DataFileMeta]
 
   private final class Builder(path: Path)
     extends ParquetWriter.Builder[InternalRow, Builder](path) {
@@ -440,48 +492,45 @@ final class LakeDataWriter(location: String, schema: StructType,
         .asInstanceOf[WriteSupport[InternalRow]]
   }
 
-  private def writerFor(bucket: Long): ParquetWriter[InternalRow] =
-    writers.getOrElseUpdate(bucket, {
-      val dir = new Path(new Path(location, graft.lake.LakeFormat.DataDir),
-        spec.dirName(bucket))
-      dir.getFileSystem(conf).mkdirs(dir)
-      val path = new Path(dir, s"${UUID.randomUUID()}.parquet")
-      val b = new Builder(path)
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-      // declared bloom columns: the filter bytes land in THIS file's
-      // footer region; readers' row-group filtering consults them for
-      // pushed equality predicates with no extra wiring
-      bloomColumns.foreach(c => b.withBloomFilterEnabled(c, true))
-      (path, b.build())
-    })._2
+  private def open(bucket: Long): OpenFile = {
+    val dir = new Path(new Path(location, graft.lake.LakeFormat.DataDir),
+      spec.dirName(bucket))
+    dir.getFileSystem(conf).mkdirs(dir)
+    val path = new Path(dir, s"${UUID.randomUUID()}.parquet")
+    val b = new Builder(path)
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withRowGroupSize(rowGroupBytes)
+    // declared bloom columns: the filter bytes land in THIS file's
+    // footer region; readers' row-group filtering consults them for
+    // pushed equality predicates with no extra wiring
+    bloomColumns.foreach(c => b.withBloomFilterEnabled(c, true))
+    new OpenFile(path, b.build())
+  }
 
   override def write(row: InternalRow): Unit = {
     if (row.isNullAt(partIdx))
       throw new IllegalArgumentException(
         s"laketable: partition column ${spec.column} must not be NULL")
-    val bucket = spec(row.getLong(partIdx))
+    val value = spec(partValue(row))
     // sorted writes order rows (bucket, sort columns), so a new bucket
     // means the previous one is FINISHED — close it now instead of holding
-    // one open (row-group-buffering) parquet writer per bucket for the
+    // open (row-group-buffering) parquet writers per bucket for the
     // task's whole lifetime
-    if (sequentialBuckets && !writers.contains(bucket) && writers.nonEmpty) {
-      writers.foreach { case (b, (path, w)) =>
-        rolled += closedMeta(path, w, b)
-      }
-      writers.clear()
-      rowsSinceCheck.clear()
+    if (sequentialBuckets && !buckets.contains(value)) closeAll()
+    val b = buckets.getOrElseUpdate(value, new Bucket)
+    val slot = (b.ordinal % b.slots.length).toInt
+    b.ordinal += 1
+    if (b.slots(slot) == null) b.slots(slot) = open(value)
+    val f = b.slots(slot)
+    f.w.write(row)
+    f.rows += 1
+    if ((maxRecordsPerFile > 0 && f.rows >= maxRecordsPerFile) ||
+        (f.rows % LakeDataWriter.RollCheckRows == 0 &&
+          f.w.getDataSize >= targetBytes)) {
+      closed += closedMeta(f, value)
+      b.slots(slot) = null
     }
-    writerFor(bucket).write(row)
-    val n = rowsSinceCheck.getOrElse(bucket, 0) + 1
-    if (n >= LakeDataWriter.RollCheckRows) {
-      rowsSinceCheck(bucket) = 0
-      val (path, w) = writers(bucket)
-      if (w.getDataSize >= targetBytes) {
-        rolled += closedMeta(path, w, bucket)
-        writers.remove(bucket)
-      }
-    } else rowsSinceCheck(bucket) = n
   }
 
   /** Close the writer and harvest stats from ITS OWN in-memory footer
@@ -490,37 +539,37 @@ final class LakeDataWriter(location: String, schema: StructType,
     * remains for the exact on-disk size (footer+magic bytes are not in
     * `getDataSize`), a metadata round-trip, not a data read.
     */
-  private def closedMeta(path: Path, w: ParquetWriter[InternalRow],
-      bucket: Long): DataFileMeta = {
-    w.close()
-    LakeWriter.metaFromFooter(w.getFooter, path,
-      path.getFileSystem(conf).getFileStatus(path).getLen, bucket)
+  private def closedMeta(f: OpenFile, bucket: Long): DataFileMeta = {
+    f.w.close()
+    LakeWriter.metaFromFooter(f.w.getFooter, f.path,
+      f.path.getFileSystem(conf).getFileStatus(f.path).getLen, bucket)
   }
 
+  private def closeAll(): Unit = {
+    for ((value, b) <- buckets; f <- b.slots if f != null)
+      closed += closedMeta(f, value)
+    buckets.clear()
+  }
+
+  /** Every file this task wrote; they stay listed, so an abort after
+    * commit still deletes them. */
   override def commit(): WriterCommitMessage = {
-    val metas = writers.toSeq.map { case (bucket, (path, w)) =>
-      closedMeta(path, w, bucket)
-    }
-    writers.clear()
-    LakeCommitMessage(rolled.result() ++ metas)
+    closeAll()
+    LakeCommitMessage(closed.toSeq)
   }
 
   override def abort(): Unit = {
-    writers.values.foreach { case (path, w) =>
-      try w.close() catch { case _: java.io.IOException => }
-      try path.getFileSystem(conf).delete(path, false)
+    val unclosed = buckets.values.flatMap(_.slots).filter(_ != null).toSeq
+    buckets.clear()
+    unclosed.foreach(f => try f.w.close() catch { case _: java.io.IOException => })
+    (unclosed.map(_.path) ++ closed.map(f => new Path(f.path))).foreach { p =>
+      try p.getFileSystem(conf).delete(p, false)
       catch { case _: java.io.IOException => }
     }
-    writers.clear()
-    rolled.result().foreach { f =>
-      try new Path(f.path).getFileSystem(conf).delete(new Path(f.path), false)
-      catch { case _: java.io.IOException => }
-    }
-    rolled.clear()
+    closed.clear()
   }
 
   override def close(): Unit =
-    writers.values.foreach { case (_, w) =>
-      try w.close() catch { case _: java.io.IOException => }
-    }
+    for (b <- buckets.values; f <- b.slots if f != null)
+      try f.w.close() catch { case _: java.io.IOException => }
 }

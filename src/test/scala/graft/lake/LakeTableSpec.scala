@@ -479,6 +479,30 @@ class LakeTableSpec extends SparkSpec {
     assert(t.files().map(_.path).distinct.size == t.files().size)
   }
 
+  test("filesPerPartition gives the file count it names") {
+    val t = newTable()
+    // 4 single-bucket batches at n = 4 -> 4 files each
+    val perBatch = (0 until 4).map { i =>
+      val files = LakeWriter.writeDataFiles(
+        LakeWriter.generateBatch(spark, 40, bucket(i), seed = 80 + i),
+        t, filesPerPartition = 4)
+      t.append(files)
+      files.size
+    }
+    assert(perBatch == Seq(4, 4, 4, 4))
+    assert(t.files().size == 16)
+    // one 2-bucket batch at n = 2 -> 2 files per bucket, row counts
+    // within 1 of each other
+    val files = LakeWriter.writeDataFiles(
+      LakeWriter.generateBatch(spark, 51, bucket(5), seed = 90)
+        .unionByName(LakeWriter.generateBatch(spark, 50, bucket(6), seed = 91)),
+      t, filesPerPartition = 2)
+    assert(files.groupBy(_.partitionValue).view.mapValues(_.size).toMap ==
+      Map(bucket(5) -> 2, bucket(6) -> 2))
+    val counts = files.map(_.rowCount)
+    assert(counts.sum == 101 && counts.max - counts.min <= 1, s"row counts $counts")
+  }
+
   test("stats-pruned scan skips files outside the partition range") {
     val t = newTable()
     appendBatch(t, 10, bucket(0), seed = 1)
