@@ -220,10 +220,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     name
   }
 
-  /** The sequence the NEXT commit will land as (commitAttempt computes the
-    * same value from the same refreshed metadata a retry body sees) —
-    * stamped onto new data files and equality-delete entries inside commit
-    * bodies so "older than" comparisons are exact across retries.
+  /** The sequence the NEXT commit will land as (each [[commit]] attempt
+    * lands as this value, read from the same refreshed metadata its body
+    * sees) — stamped onto new data files and equality-delete entries
+    * inside commit bodies so "older than" comparisons are exact across
+    * retries.
     */
   private def nextSeq: Long =
     meta.snapshots.map(_.id).maxOption.getOrElse(-1L) + 1
@@ -371,9 +372,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
   private def writeAtomic(dest: Path, content: String): Unit =
     CommitCas.forScheme(fs.getScheme).publish(fs, dest, content)
 
-  private def maxRetries: Int =
-    meta.properties.getOrElse(PropCommitRetries, "100").toInt
-
   /** Jittered exponential backoff between lost-CAS retries. Without it,
     * racing committers stay phase-locked (each re-derives at full speed
     * and re-races the same pack), so consecutive losses are nearly
@@ -395,56 +393,58 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * is a few win cycles, not ladder-cap multiples. Base is per-table
     * ([[LakeFormat.PropCommitRetryWaitMs]]), 0 disables.
     */
-  private def retryBackoff(attempt: Int): Unit = {
-    val base = meta.properties.getOrElse(PropCommitRetryWaitMs,
-      DefaultCommitRetryWaitMs).toLong
+  private def retryBackoff(base: Long, attempt: Int): Unit =
     if (base > 0 && attempt > 0) {
       val (lo, hi) = LakeTable.backoffWindowMs(base, attempt)
       val ms = lo +
         java.util.concurrent.ThreadLocalRandom.current().nextLong(hi - lo + 1)
       if (ms > 0) Thread.sleep(ms)
     }
-  }
+
+  /** What one commit attempt publishes. Built inside a [[commit]] body, so
+    * each default — carry the current state forward — reads the same
+    * refreshed metadata the attempt was derived from.
+    */
+  private case class Commit(
+      manifests: Seq[String] = meta.current.map(_.manifests).getOrElse(Nil),
+      keepSnapshots: Seq[Snapshot] = meta.snapshots,
+      propsUpdate: Map[String, String] = Map.empty,
+      propsRemove: Set[String] = Set.empty,
+      deleteManifests: Seq[String] =
+        meta.current.map(_.deleteManifests).getOrElse(Nil),
+      schemaDdl: String = meta.schemaDdl,
+      // rename/drop evolution: new registry entries + the id to make
+      // current (entries are append-only; ids never reused)
+      schemasUpdate: Option[(Seq[SchemaDef], Int)] = None,
+      // partition-width evolution: same append-only contract
+      specsUpdate: Option[(Seq[SpecDef], Int)] = None,
+      // WAP staging: a "stage" snapshot forks from its branch head and
+      // leaves what main readers see untouched
+      parentOverride: Option[Long] = None,
+      advanceCurrent: Boolean = true)
 
   /** One CAS attempt: only the metadata write can signal a conflict;
     * everything after the CAS lands is best-effort maintenance and must
     * never be mistaken for contention (a retry after a landed commit would
     * apply the operation twice).
     */
-  private def commitAttempt(op: String, manifests: Seq[String],
-      keepSnapshots: Seq[Snapshot],
-      propsUpdate: Map[String, String] = Map.empty,
-      schemaUpdate: Option[String] = None,
-      propsRemove: Set[String] = Set.empty,
-      // None = carry the current snapshot's delete manifests forward
-      deleteManifests: Option[Seq[String]] = None,
-      // WAP staging: a "stage" snapshot forks from its branch head and
-      // leaves what main readers see untouched
-      parentOverride: Option[Long] = None,
-      advanceCurrent: Boolean = true,
-      // rename/drop evolution: new registry entries + the id to make
-      // current (entries are append-only; ids never reused)
-      schemasUpdate: Option[(Seq[SchemaDef], Int)] = None,
-      // partition-width evolution: same append-only contract
-      specsUpdate: Option[(Seq[SpecDef], Int)] = None): Long = {
+  private def commitAttempt(op: String, c: Commit): Long = {
     val cur = meta
-    val nextVersion = cur.snapshots.map(_.id).maxOption.getOrElse(-1L) + 1
-    val newSchemaDdl = schemaUpdate.getOrElse(cur.schemaDdl)
-    val newSchemaId = schemasUpdate.map(_._2).getOrElse(cur.currentSchemaId)
+    val nextVersion = nextSeq
+    val newSchemaId = c.schemasUpdate.map(_._2).getOrElse(cur.currentSchemaId)
     // every snapshot pins the schema current as of its commit, so time
     // travel reads old vintages with their own column set
-    val snap = Snapshot(nextVersion, parentOverride.getOrElse(cur.currentSnapshotId),
-      System.currentTimeMillis(), op, manifests, Some(newSchemaDdl),
-      deleteManifests.getOrElse(cur.current.map(_.deleteManifests).getOrElse(Nil)),
-      schemaId = Some(newSchemaId))
-    val next = cur.copy(schemaDdl = newSchemaDdl,
-      properties = (cur.properties -- propsRemove) ++ propsUpdate,
-      snapshots = keepSnapshots :+ snap,
-      currentSnapshotId = if (advanceCurrent) nextVersion else cur.currentSnapshotId,
-      schemas = cur.schemas ++ schemasUpdate.map(_._1).getOrElse(Nil),
+    val snap = Snapshot(nextVersion, c.parentOverride.getOrElse(cur.currentSnapshotId),
+      System.currentTimeMillis(), op, c.manifests, Some(c.schemaDdl),
+      c.deleteManifests, schemaId = Some(newSchemaId))
+    val next = cur.copy(schemaDdl = c.schemaDdl,
+      properties = (cur.properties -- c.propsRemove) ++ c.propsUpdate,
+      snapshots = c.keepSnapshots :+ snap,
+      currentSnapshotId = if (c.advanceCurrent) nextVersion else cur.currentSnapshotId,
+      schemas = cur.schemas ++ c.schemasUpdate.map(_._1).getOrElse(Nil),
       currentSchemaId = newSchemaId,
-      specs = cur.specs ++ specsUpdate.map(_._1).getOrElse(Nil),
-      currentSpecId = specsUpdate.map(_._2).getOrElse(cur.currentSpecId))
+      specs = cur.specs ++ c.specsUpdate.map(_._1).getOrElse(Nil),
+      currentSpecId = c.specsUpdate.map(_._2).getOrElse(cur.currentSpecId))
     writeAtomic(new Path(metaDir, s"v$nextVersion.json"), Json.metaToJson(next))
     meta = next
     // Pointer update is advisory (recovery lists metadata/ for max v).
@@ -457,37 +457,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     nextVersion
   }
 
-  /** Optimistic retry loop. `body` is re-evaluated against REFRESHED
-    * metadata on every attempt — commit content must never be computed
-    * from pre-conflict state (a stale manifest list would silently drop a
-    * concurrent committer's files: the lost-update hazard). Returning None
-    * from `body` means nothing to commit (-1).
-    */
-  private def retryCommit(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot])]): Long =
-    retryCommitProps(op)(() => body().map { case (m, s) => (m, s, Map.empty[String, String]) })
-
-  /** retryCommit variant whose body can also update table properties
-    * atomically with the snapshot swap (streaming-epoch fencing below).
-    */
-  private def retryCommitProps(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Map[String, String])]): Long =
-    retryCommitPropsRemove(op)(() =>
-      body().map { case (m, s, p) => (m, s, p, Set.empty[String]) })
-
-  /** retryCommitProps variant whose body can also DELETE property keys
-    * (streaming-epoch watermark GC below — a plain merge can never shrink
-    * the map).
-    */
-  private def retryCommitPropsRemove(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Map[String, String], Set[String])]): Long =
-    retryCommitFull(op)(() =>
-      body().map { case (m, s, p, r) => (m, s, p, r, None) })
-
-  /** Bottom of the retry-helper ladder: bodies can additionally REPLACE the
-    * delete-manifest list (merge-on-read deletes and the rewrite commits
-    * that prune them); None carries the current snapshot's list forward.
-    */
   /** Contention signal: has THIS table handle recently lost a CAS?
     * Gates the chain-break yield below — a single committer never sets
     * it, so the yield costs nothing on the recommended path. DECAYS:
@@ -513,32 +482,34 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * stuck in the refresh window. Fairness from purely local signals —
     * no coordination object, no reads.
     */
-  private def chainBreakYield(): Unit =
-    if (conflictSeen && chainWins > 0 && chainWins % 3 == 0) {
-      val base = meta.properties.getOrElse(PropCommitRetryWaitMs,
-        DefaultCommitRetryWaitMs).toLong
-      if (base > 0) {
-        val ms = java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(base * 3 + 1)
-        if (ms > 0) Thread.sleep(ms)
-      }
+  private def chainBreakYield(base: Long): Unit =
+    if (conflictSeen && chainWins > 0 && chainWins % 3 == 0 && base > 0) {
+      val ms = java.util.concurrent.ThreadLocalRandom.current()
+        .nextLong(base * 3 + 1)
+      if (ms > 0) Thread.sleep(ms)
     }
 
-  private def retryCommitFull(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Map[String, String],
-        Set[String], Option[Seq[String]])]): Long = {
+  /** The one commit entry point: an optimistic retry loop under
+    * `commit.retry.num-retries`. `body` is re-evaluated against REFRESHED
+    * metadata on every attempt — commit content must never be computed
+    * from pre-conflict state (a stale manifest list would silently drop a
+    * concurrent committer's files: the lost-update hazard). Returning None
+    * from `body` means nothing to commit (-1).
+    */
+  private def commit(op: String)(body: () => Option[Commit]): Long = {
+    val maxRetries = meta.properties.getOrElse(PropCommitRetries, "100").toInt
+    val waitMs = meta.properties.getOrElse(PropCommitRetryWaitMs,
+      DefaultCommitRetryWaitMs).toLong
     var attempt = 0
-    var yielded = false
     while (true) {
       body() match {
         case None => return -1L
-        case Some((manifests, keepSnapshots, props, remove, deletes)) =>
+        case Some(c) =>
           // yield only when there is actually something to commit — a
           // no-op body (idempotent replay) must never pay the beat
-          if (!yielded) { chainBreakYield(); yielded = true }
+          if (attempt == 0) chainBreakYield(waitMs)
           try {
-            val id = commitAttempt(op, manifests, keepSnapshots, props,
-              propsRemove = remove, deleteManifests = deletes)
+            val id = commitAttempt(op, c)
             chainWins = if (attempt == 0) chainWins + 1 else 0
             if (chainWins >= LakeTable.ChainCalmWins) {
               conflictSeen = false
@@ -551,21 +522,14 @@ final class LakeTable private (val location: String, private var meta: TableMeta
               conflictSeen = true
               LakeTable.commitRetries.incrementAndGet()
               if (attempt >= maxRetries)
-                throw new IllegalStateException(s"commit failed after $attempt retries")
-              retryBackoff(attempt)
+                throw new IllegalStateException(s"$op failed after $attempt retries")
+              retryBackoff(waitMs, attempt)
               refresh()
           }
       }
     }
     -1L // unreachable
   }
-
-  /** retryCommit variant for commits that set the delete-manifest list. */
-  private def retryCommitDeletes(op: String)(
-      body: () => Option[(Seq[String], Seq[Snapshot], Seq[String])]): Long =
-    retryCommitFull(op)(() =>
-      body().map { case (m, s, d) => (m, s, Map.empty[String, String],
-        Set.empty[String], Some(d)) })
 
   /** Honors write.metadata.delete-after-commit.enabled +
     * previous-versions-max (§1.3): drop superseded v*.json beyond the limit.
@@ -596,10 +560,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     knownPathsCache._2
   }
 
-  /** Fast append (A10) with path-dedupe for idempotent replay — the
-    * crash-window fix for the reference's delete-before-commit /
-    * at-least-once-redelivery bugs (A14, §3.3.6).
-    */
   /** Register EXTERNALLY-WRITTEN parquet files into the table —
     * metadata-only, the Iceberg `add_files` migration path and the bulk
     * form of what the moniker flow does one batch at a time. Files under
@@ -676,6 +636,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     append(metas)
   }
 
+  /** Fast append (A10) with path-dedupe for idempotent replay — the
+    * crash-window fix for the reference's delete-before-commit /
+    * at-least-once-redelivery bugs (A14, §3.3.6).
+    */
   def append(newFiles: Seq[DataFileMeta],
       // properties merged ATOMICALLY with the snapshot swap (e.g. the
       // ANN maintenance-debt odometer): a reader of any snapshot sees
@@ -685,7 +649,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     // cache forward without re-reading manifests (see below)
     var lastKnown: Set[String] = null
     var lastFresh: Seq[String] = Nil
-    val id = retryCommitProps("append") { () =>
+    val id = commit("append") { () =>
       val existing = meta.current.map(_.manifests).getOrElse(Nil)
       // dedupe within the batch too: one sweep can carry the same file
       // twice (at-least-once event redelivery)
@@ -698,8 +662,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // from minting an empty snapshot per redelivery — idempotent means
       // no new rows AND no history growth
       if (fresh.isEmpty) None
-      else Some((maybeMerge(existing :+ writeManifest(stamp(fresh))),
-        meta.snapshots, props))
+      else Some(Commit(maybeMerge(existing :+ writeManifest(stamp(fresh))),
+        propsUpdate = props))
     }
     // Roll the cache forward: the new snapshot's path set is exactly the
     // parent's plus this commit's fresh paths (a merge reshuffles manifests
@@ -720,12 +684,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * compactFiles, driven by the DSv2 truncate-write path.
     */
   def overwrite(newFiles: Seq[DataFileMeta]): Long =
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       val fresh = newFiles.distinctBy(_.path)
       // full replacement: no pre-existing file survives, so no pending
       // delete can reference a live file
-      Some((writeManifests(stamp(fresh)),
-        meta.snapshots, Nil))
+      Some(Commit(writeManifests(stamp(fresh)), deleteManifests = Nil))
     }
 
   /** Full-table overwrite that ATOMICALLY also updates table properties —
@@ -738,10 +701,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def overwriteWithProps(newFiles: Seq[DataFileMeta],
       props: Map[String, String]): Long =
-    retryCommitFull("rewrite") { () =>
+    commit("rewrite") { () =>
       val fresh = newFiles.distinctBy(_.path)
-      Some((writeManifests(stamp(fresh)), meta.snapshots, props,
-        Set.empty[String], Some(Nil)))
+      Some(Commit(writeManifests(stamp(fresh)), propsUpdate = props,
+        deleteManifests = Nil))
     }
 
   /** Epoch-fenced fast append for exactly-once streaming sinks: the epoch
@@ -766,7 +729,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // they merge, so state advances exactly once per epoch
       extraProps: Map[String, String] = Map.empty): Long = {
     val key = s"$PropStreamEpochPrefix$queryId"
-    retryCommitFull("append") { () =>
+    commit("append") { () =>
       if (meta.properties.get(key)
           .exists(v => LakeTable.parseEpochValue(v)._1 >= epochId)) None
       else {
@@ -799,19 +762,16 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           .filter(k => k.startsWith(PropStreamEpochPrefix) && k != key)
           .filter(k => now - LakeTable.parseEpochValue(meta.properties(k))._2 >= ttl)
           .toSet
-        Some((maybeMerge(withNew), meta.snapshots,
-          extraProps + (key -> s"$epochId:$now"), stale,
-          if (newDeletes.isEmpty) None else Some(withDels)))
+        Some(Commit(maybeMerge(withNew),
+          propsUpdate = extraProps + (key -> s"$epochId:$now"),
+          propsRemove = stale, deleteManifests = withDels))
       }
     }
   }
 
   /** Table-property update as one metadata commit (SQL SET TBLPROPERTIES). */
   def setProperty(key: String, value: String): Long =
-    retryCommitProps("alter") { () =>
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map(key -> value)))
-    }
+    commit("alter")(() => Some(Commit(propsUpdate = Map(key -> value))))
 
   /** Schema evolution: ADD COLUMN (nullable, appended last). One metadata
     * commit bumping schemaDdl — no data file is touched; files written
@@ -826,7 +786,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def addColumn(name: String,
       dataType: org.apache.spark.sql.types.DataType): Long =
-    alterSchemaRetry { () =>
+    commit("alter") { () =>
       if (schema.fieldNames.exists(_.equalsIgnoreCase(name)))
         throw new IllegalArgumentException(s"column $name already exists")
       val newDdl = StructType(schema.fields :+
@@ -839,7 +799,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           Some((Seq(SchemaDef(nextId, newDdl,
             cur.ids :+ (meta.lastFieldId + 1))), nextId))
         }
-      (newDdl, schemasUpd)
+      Some(Commit(schemaDdl = newDdl, schemasUpdate = schemasUpd))
     }
 
   /** Schema evolution: RENAME COLUMN. Mints a new [[SchemaDef]] carrying
@@ -851,7 +811,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * under before the top-level DDL diverges from it.
     */
   def renameColumn(oldName: String, newName: String): Long =
-    alterSchemaRetry(() => {
+    commit("alter") { () =>
       val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(oldName))
       if (idx < 0) throw new IllegalArgumentException(s"no column $oldName")
       if (schema.fieldNames.exists(_.equalsIgnoreCase(newName)))
@@ -864,9 +824,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val fields = schema.fields.clone()
       fields(idx) = fields(idx).copy(name = newName)
       val newDdl = StructType(fields).toDDL
-      (newDdl, Some((base :+ SchemaDef(nextId, newDdl,
-        meta.currentSchemaDef.ids), nextId)))
-    }, () => rewriteColumnListProps(oldName, Some(newName)))
+      Some(Commit(schemaDdl = newDdl, schemasUpdate = Some((base :+
+        SchemaDef(nextId, newDdl, meta.currentSchemaDef.ids), nextId)),
+        propsUpdate = rewriteColumnListProps(oldName, Some(newName))))
+    }
 
   /** Schema evolution: WIDEN COLUMN TYPE (`ALTER COLUMN x TYPE t`) — the
     * Iceberg-legal promotions only: INT → BIGINT, FLOAT → DOUBLE, and
@@ -889,7 +850,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def widenColumnType(name: String,
       newType: org.apache.spark.sql.types.DataType): Long =
-    alterSchemaRetry(() => {
+    commit("alter") { () =>
       import org.apache.spark.sql.types._
       val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
       if (idx < 0) throw new IllegalArgumentException(s"no column $name")
@@ -913,9 +874,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val fields = schema.fields.clone()
       fields(idx) = fields(idx).copy(dataType = newType)
       val newDdl = StructType(fields).toDDL
-      (newDdl, Some((base :+ SchemaDef(nextId, newDdl,
-        meta.currentSchemaDef.ids), nextId)))
-    })
+      Some(Commit(schemaDdl = newDdl, schemasUpdate = Some((base :+
+        SchemaDef(nextId, newDdl, meta.currentSchemaDef.ids), nextId))))
+    }
 
   /** Schema evolution: DROP COLUMN. Metadata-only — the column's field id
     * leaves the current schema (and is never reused), so every file's copy
@@ -923,7 +884,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * snapshots still reads it through their pinned schema.
     */
   def dropColumn(name: String): Long =
-    alterSchemaRetry(() => {
+    commit("alter") { () =>
       val idx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
       if (idx < 0) throw new IllegalArgumentException(s"no column $name")
       if (schema.fields.length == 1)
@@ -935,9 +896,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val (base, nextId) = mintBase()
       val newDdl = StructType(
         schema.fields.patch(idx, Nil, 1)).toDDL
-      (newDdl, Some((base :+ SchemaDef(nextId, newDdl,
-        meta.currentSchemaDef.ids.patch(idx, Nil, 1)), nextId)))
-    }, () => rewriteColumnListProps(name, None))
+      Some(Commit(schemaDdl = newDdl, schemasUpdate = Some((base :+
+        SchemaDef(nextId, newDdl, meta.currentSchemaDef.ids.patch(idx, Nil, 1)),
+        nextId)), propsUpdate = rewriteColumnListProps(name, None)))
+    }
 
   /** Pending equality-delete files key rows BY NAME; renaming/dropping a
     * key column out from under them would silently stop retiring the rows
@@ -984,29 +946,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       (Seq(SchemaDef(0, meta.schemaDdl, names.indices.map(_ + 1).toSeq)),
         meta.schemas.map(_.id).maxOption.getOrElse(0) + 1)
     } else (Nil, meta.schemas.map(_.id).max + 1)
-
-  private def alterSchemaRetry(
-      body: () => (String, Option[(Seq[SchemaDef], Int)]),
-      propsUpdate: () => Map[String, String] = () => Map.empty): Long = {
-    var attempt = 0
-    while (true) {
-      val (newDdl, schemasUpd) = body()
-      try
-        return commitAttempt("alter",
-          meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-          propsUpdate = propsUpdate(),
-          schemaUpdate = Some(newDdl), schemasUpdate = schemasUpd)
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"alter failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
-    }
-    -1L // unreachable
-  }
 
   /** Column-list properties (`write.sort-order`, `write.bloom.columns`)
     * rewritten for a rename (newName = Some) or drop (None) of `oldName`.
@@ -1061,8 +1000,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def setPartitionWidth(newWidthMicros: Long): Long = {
     require(newWidthMicros > 0, "truncate width must be positive")
-    var attempt = 0
-    while (true) {
+    commit("alter") { () =>
       if (newWidthMicros == spec.widthMicros)
         throw new IllegalArgumentException(
           s"partition width is already $newWidthMicros")
@@ -1071,20 +1009,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val (base, nextId) =
         if (meta.specs.isEmpty) (Seq(SpecDef(0, meta.spec.widthMicros)), 1)
         else (Nil, meta.specs.map(_.id).max + 1)
-      try
-        return commitAttempt("alter",
-          meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-          specsUpdate = Some((base :+ SpecDef(nextId, newWidthMicros), nextId)))
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"alter failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      Some(Commit(specsUpdate =
+        Some((base :+ SpecDef(nextId, newWidthMicros), nextId))))
     }
-    -1L // unreachable
   }
 
   // ---- snapshot refs: tags + rollback ------------------------------------
@@ -1108,11 +1035,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
   def createTag(name: String, snapshotId: Long): Long = {
     require(name.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid tag name: $name (must start with a letter)")
-    retryCommitProps("tag") { () =>
+    commit("tag") { () =>
       if (meta.snapshot(snapshotId).isEmpty)
         throw new IllegalArgumentException(s"no snapshot $snapshotId to tag")
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map(s"$PropTagPrefix$name" -> snapshotId.toString)))
+      Some(Commit(propsUpdate = Map(s"$PropTagPrefix$name" -> snapshotId.toString)))
     }
   }
 
@@ -1120,10 +1046,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * when the tag doesn't exist.
     */
   def dropTag(name: String): Long =
-    retryCommitPropsRemove("untag") { () =>
+    commit("untag") { () =>
       if (!meta.properties.contains(s"$PropTagPrefix$name")) None
-      else Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map.empty[String, String], Set(s"$PropTagPrefix$name")))
+      else Some(Commit(propsRemove = Set(s"$PropTagPrefix$name")))
     }
 
   // ---- WAP branches: stage → audit → publish -----------------------------
@@ -1147,8 +1072,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
   def stageAppend(newFiles: Seq[DataFileMeta], branch: String): Long = {
     require(branch.matches("[A-Za-z][A-Za-z0-9_.-]*"),
       s"invalid branch name: $branch (must start with a letter)")
-    var attempt = 0
-    while (true) {
+    commit("stage") { () =>
       val base = branchHead(branch)
         .map(id => meta.snapshot(id).getOrElse(throw new IllegalStateException(
           s"branch $branch points at missing snapshot $id")))
@@ -1159,21 +1083,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val manifests =
         if (fresh.isEmpty) base.manifests
         else base.manifests :+ writeManifest(stamp(fresh))
-      val stagedId = nextSeq
-      try return commitAttempt("stage", manifests, meta.snapshots,
-        propsUpdate = Map(s"$PropBranchPrefix$branch" -> stagedId.toString),
-        deleteManifests = Some(base.deleteManifests),
-        parentOverride = Some(base.id), advanceCurrent = false)
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"stage failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      Some(Commit(manifests,
+        propsUpdate = Map(s"$PropBranchPrefix$branch" -> nextSeq.toString),
+        deleteManifests = base.deleteManifests,
+        parentOverride = Some(base.id), advanceCurrent = false))
     }
-    -1L // unreachable
   }
 
   /** Publish half: fold the branch's staged manifests into MAIN as one
@@ -1185,7 +1099,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def publishBranch(branch: String): Long = {
     val key = s"$PropBranchPrefix$branch"
-    retryCommitPropsRemove("append") { () =>
+    commit("append") { () =>
       branchHead(branch) match {
         case None => None
         case Some(headId) =>
@@ -1204,8 +1118,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           else {
             val cur = meta.current.map(_.manifests).getOrElse(Nil)
             val curSet = cur.toSet
-            Some((maybeMerge(cur ++ staged.filterNot(curSet.contains)),
-              meta.snapshots, Map.empty[String, String], Set(key)))
+            Some(Commit(maybeMerge(cur ++ staged.filterNot(curSet.contains)),
+              propsRemove = Set(key)))
           }
       }
     }
@@ -1216,10 +1130,9 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     */
   def dropBranch(branch: String): Long = {
     val key = s"$PropBranchPrefix$branch"
-    retryCommitPropsRemove("unbranch") { () =>
+    commit("unbranch") { () =>
       if (!meta.properties.contains(key)) None
-      else Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        Map.empty[String, String], Set(key)))
+      else Some(Commit(propsRemove = Set(key)))
     }
   }
 
@@ -1231,9 +1144,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * (rollback is not an "append" snapshot), so a stream crossing a
     * rollback never re-delivers.
     */
-  def rollbackTo(snapshotId: Long): Long = {
-    var attempt = 0
-    while (true) {
+  def rollbackTo(snapshotId: Long): Long =
+    commit("rollback") { () =>
       val target = meta.snapshot(snapshotId).getOrElse(
         throw new IllegalArgumentException(s"no snapshot $snapshotId to roll back to"))
       val restoredDdl = target.schemaDdl.getOrElse(meta.schemaDdl)
@@ -1274,23 +1186,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           restoredDef.fold(Map.empty[String, String])(
             translateColumnListProps(meta.currentSchemaDef, _))
         }
-      try
-        return commitAttempt("rollback", target.manifests, meta.snapshots,
-          propsUpdate = propsUpd,
-          schemaUpdate = Some(restoredDdl),
-          deleteManifests = Some(target.deleteManifests),
-          schemasUpdate = Some(schemasUpd))
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(s"rollback failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      Some(Commit(target.manifests, propsUpdate = propsUpd,
+        deleteManifests = target.deleteManifests, schemaDdl = restoredDdl,
+        schemasUpdate = Some(schemasUpd)))
     }
-    -1L // unreachable
-  }
 
   /** Consolidate the current snapshot's data manifests into ONE (the
     * Iceberg `rewrite_manifests` maintenance op): commit-heavy ingest
@@ -1302,25 +1201,12 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * untouched, and incremental readers see no new files (a "compact"
     * snapshot, never re-delivered). Returns -1 when already consolidated.
     */
-  def rewriteManifests(): Long = {
-    var attempt = 0
-    while (true) {
+  def rewriteManifests(): Long =
+    commit("compact") { () =>
       val cur = meta.current.map(_.manifests).getOrElse(Nil)
-      if (cur.size <= 1) return -1L
-      val merged = writeManifests(cur.flatMap(readManifest))
-      try return commitAttempt("compact", merged, meta.snapshots)
-      catch {
-        case _: java.io.IOException =>
-          attempt += 1
-          if (attempt >= maxRetries)
-            throw new IllegalStateException(
-              s"rewrite_manifests failed after $attempt retries")
-          retryBackoff(attempt)
-          refresh()
-      }
+      if (cur.size <= 1) None
+      else Some(Commit(writeManifests(cur.flatMap(readManifest))))
     }
-    -1L // unreachable
-  }
 
   /** Manifest compaction once the count crosses the merge threshold.
     *
@@ -1364,7 +1250,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     * Returns the new snapshot id, or -1 if nothing matched.
     */
   def deleteOlderThan(cutoffMicros: Long): Long = {
-    retryCommitDeletes("delete") { () =>
+    commit("delete") { () =>
       // recomputed from fresh metadata on every attempt so a concurrent
       // append's files survive the rewrite of the manifest list. A file is
       // droppable iff its WHOLE bucket sits below the cutoff — judged per
@@ -1373,8 +1259,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val (dropped, kept) = files().partition(f =>
         f.partitionValue + meta.specWidth(f.specId) <= cutoffMicros)
       if (dropped.isEmpty) None
-      else Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      else Some(Commit(writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -1425,10 +1311,10 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     val live = files()
     if (live.isEmpty && extra.isEmpty) return -1L
     if (live.isEmpty) // overwrite into an empty table = plain append
-      return retryCommitDeletes("rewrite") { () =>
+      return commit("rewrite") { () =>
         val kept = files() ++ stamp(extra)
-        Some((writeManifests(kept), meta.snapshots,
-          carryDeleteManifests(kept)))
+        Some(Commit(writeManifests(kept),
+          deleteManifests = carryDeleteManifests(kept)))
       }
     // Pending MoR deletes must be honored throughout: a deleted row that
     // matched the scan would mis-classify its file; one that survived a
@@ -1475,15 +1361,15 @@ final class LakeTable private (val location: String, private var meta: TableMeta
         LakeWriter.writeDataFiles(keepRows, this)
       }
     val replaced = (partial ++ fullyDropped).map(_.path).toSet
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       assertNoNewDeletes(scanSnapshot, partial ++ fullyDropped, "delete")
       assertReplacedLive(replaced, "delete")
       // recompute survivors from fresh metadata: concurrent appends since
       // the scan must not be dropped by this manifest rewrite
       val kept = files().filterNot(f => replaced.contains(f.path)) ++
         stamp(rewritten) ++ stamp(extra)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(Commit(writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -1539,7 +1425,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
         LakeWriter.writeDataFiles(keepRows, this)
       }
     val straddlingPaths = straddling.map(_.path).toSet
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       val cur = files()
       // lost-update guard: files added since the scan that overlap a
       // touched bucket would be silently swallowed by the swap
@@ -1554,8 +1440,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val kept = cur.filter { f =>
         !straddlingPaths.contains(f.path) && !writeBuckets(f).forall(touched)
       } ++ stamp(rewritten) ++ stamp(fresh)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(Commit(writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -1658,21 +1544,6 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     }
   }
 
-  /** Commit half of [[deleteWhereMoR]]: append the position-delete files'
-    * manifest as one snapshot.
-    *
-    * Conflict validation, mirroring [[commitDelta]]: a compaction/CoW
-    * rewrite landing between the scan and this commit replaces data files
-    * these positions reference — the entries would dangle forever and the
-    * DELETE would silently no-op (rows resurrect). Validate per attempt
-    * against FRESH metadata. Entries past the inline-path cap carry no
-    * exact path list, so they validate via the SCAN SNAPSHOT instead:
-    * abort if any file removed since the scan lies in the entry's
-    * [lo,hi] path range (a mere live-overlap check would pass trivially —
-    * a rewrite's replacement files land in the same bucket dirs and sort
-    * inside the range). An expired scan snapshot degrades to abort:
-    * the caller re-runs the DELETE against current data.
-    */
   /** Dangling-reference detection shared by the delete/delta commits:
     * entries inlining their referenced paths check them against the live
     * set exactly; CAPPED entries (range only) check that no file removed
@@ -1705,9 +1576,24 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     }.toSeq
   }
 
+  /** Commit half of [[deleteWhereMoR]]: append the position-delete files'
+    * manifest as one snapshot.
+    *
+    * Conflict validation, mirroring [[commitDelta]]: a compaction/CoW
+    * rewrite landing between the scan and this commit replaces data files
+    * these positions reference — the entries would dangle forever and the
+    * DELETE would silently no-op (rows resurrect). Validate per attempt
+    * against FRESH metadata. Entries past the inline-path cap carry no
+    * exact path list, so they validate via the SCAN SNAPSHOT instead:
+    * abort if any file removed since the scan lies in the entry's
+    * [lo,hi] path range (a mere live-overlap check would pass trivially —
+    * a rewrite's replacement files land in the same bucket dirs and sort
+    * inside the range). An expired scan snapshot degrades to abort:
+    * the caller re-runs the DELETE against current data.
+    */
   private[lake] def commitPositionDeletes(written: Seq[DeleteFileMeta],
       scanSnapshot: Option[Long] = None): Long =
-    retryCommitDeletes("delete") { () =>
+    commit("delete") { () =>
       val dangling = danglingDeleteRefs(written,
         files().map(_.path).toSet, scanSnapshot)
       if (dangling.nonEmpty)
@@ -1716,8 +1602,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
             s"${dangling.size} referenced data file(s) no longer live " +
             s"(first: ${dangling.head})")
       val cur = meta.current.map(_.deleteManifests).getOrElse(Nil)
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
-        cur :+ writeDeleteManifest(written)))
+      Some(Commit(deleteManifests = cur :+ writeDeleteManifest(written)))
     }
 
   /** Compact the table's POSITION-delete files (the Iceberg
@@ -1780,7 +1665,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       if (n == 0L) Nil else writeDeleteParquets(spark, rows, n)
     } finally rows.unpersist()
     val replaced = pos.map(_.path).toSet
-    retryCommitDeletes("rewrite-deletes") { () =>
+    commit("rewrite-deletes") { () =>
       val curEntries = deleteFilesMeta()
       val gone = replaced -- curEntries.map(_.path).toSet
       if (gone.nonEmpty)
@@ -1799,7 +1684,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       // eq entries + any pos files appended since the scan carry forward
       val kept = curEntries.filterNot(d => replaced.contains(d.path))
       val next = kept ++ rewritten
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
+      Some(Commit(deleteManifests =
         if (next.isEmpty) Nil else Seq(writeDeleteManifest(next))))
     }
   }
@@ -1889,7 +1774,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     // the replaced eq parquets become orphans after the commit; the
     // bounded GC sweep (removeOrphanFiles) collects them with every
     // other dead file
-    retryCommitDeletes("rewrite-deletes") { () =>
+    commit("rewrite-deletes") { () =>
       val curEntries = deleteFilesMeta()
       val gone = replaced -- curEntries.map(_.path).toSet
       if (gone.nonEmpty)
@@ -1906,7 +1791,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
             s"(first: ${dangling.head})")
       val kept = curEntries.filterNot(d => replaced.contains(d.path))
       val next = kept ++ rewritten
-      Some((meta.current.map(_.manifests).getOrElse(Nil), meta.snapshots,
+      Some(Commit(deleteManifests =
         if (next.isEmpty) Nil else Seq(writeDeleteManifest(next))))
     }
   }
@@ -1934,7 +1819,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       scanSnapshot: Option[Long] = None): Long = {
     if (newData.isEmpty && newDeletes.isEmpty) return -1L
     val fresh = newData.distinctBy(_.path)
-    retryCommitDeletes(if (fresh.nonEmpty) "append" else "delete") { () =>
+    commit(if (fresh.nonEmpty) "append" else "delete") { () =>
       assertEqColumnsResolvable(newDeletes, "delta commit")
       val dangling = danglingDeleteRefs(newDeletes,
         files().map(_.path).toSet, scanSnapshot)
@@ -1946,11 +1831,11 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       val curM = meta.current.map(_.manifests).getOrElse(Nil)
       val curD = meta.current.map(_.deleteManifests).getOrElse(Nil)
       val s = nextSeq
-      Some((if (fresh.isEmpty) curM else curM :+ writeManifest(stamp(fresh)),
-        meta.snapshots,
-        if (newDeletes.isEmpty) curD
-        else curD :+ writeDeleteManifest(newDeletes.map(d =>
-          if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))))
+      Some(Commit(if (fresh.isEmpty) curM else curM :+ writeManifest(stamp(fresh)),
+        deleteManifests =
+          if (newDeletes.isEmpty) curD
+          else curD :+ writeDeleteManifest(newDeletes.map(d =>
+            if (d.kind == DeleteFileMeta.KindEq) d.copy(seq = s) else d))))
     }
   }
 
@@ -2162,7 +2047,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       scanSnapshot: Option[Long] = None): Long = {
     val fresh = newFiles.distinctBy(_.path)
     if (replacedPaths.isEmpty && fresh.isEmpty) return -1L
-    retryCommitDeletes("rewrite") { () =>
+    commit("rewrite") { () =>
       scanSnapshot.foreach { s =>
         assertReplacedLive(replacedPaths, "rewrite")
         val replacedMetas = files().filter(f => replacedPaths.contains(f.path))
@@ -2170,8 +2055,8 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       }
       val kept = files().filterNot(f => replacedPaths.contains(f.path)) ++
         stamp(fresh)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(Commit(writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -2290,13 +2175,13 @@ final class LakeTable private (val location: String, private var meta: TableMeta
       sortBy = effectiveSortBy, maxRecordsPerFile = maxRecordsPerFile,
       sortExprs = zKey)
     val replaced = candidates.map(_.path).toSet
-    retryCommitDeletes("compact") { () =>
+    commit("compact") { () =>
       assertNoNewDeletes(scanSnapshot, candidates, "compaction")
       assertReplacedLive(replaced, "compaction")
       val kept = files().filterNot(f => replaced.contains(f.path)) ++
         stamp(rewritten)
-      Some((writeManifests(kept),
-        meta.snapshots, carryDeleteManifests(kept)))
+      Some(Commit(writeManifests(kept),
+        deleteManifests = carryDeleteManifests(kept)))
     }
   }
 
@@ -2317,7 +2202,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
     var orphanManifests: Set[String] = Set.empty
     var orphanDeleteFiles: Set[String] = Set.empty
     var orphanDeleteManifests: Set[String] = Set.empty
-    val id = retryCommit("expire") { () =>
+    val id = commit("expire") { () =>
       val ordered = meta.snapshots.sortBy(_.id)
       val byAge = ordered.filter(s =>
         s.timestampMs >= olderThanMs || s.id == meta.currentSnapshotId)
@@ -2412,7 +2297,7 @@ final class LakeTable private (val location: String, private var meta: TableMeta
           .flatMap(readDeleteManifest).map(_.path).toSet
         orphanDeleteFiles =
           orphanDeleteManifests.flatMap(readDeleteManifest).map(_.path) -- keptDelPaths
-        Some((meta.current.map(_.manifests).getOrElse(Nil), keep))
+        Some(Commit(keepSnapshots = keep))
       }
     }
     if (id >= 0) {
@@ -2715,10 +2600,9 @@ object LakeTable {
     */
   private[lake] lazy val hadoopConf = new Configuration()
 
-  /** JVM-global count of lost-CAS commit retries on the
-    * retryCommitFull path (appends / delete commits / property updates
-    * — the contended fast-append workload): each round that lost the
-    * rename race and re-derived against refreshed metadata.
+  /** JVM-global count of lost-CAS commit retries, over every commit
+    * (all of them go through `LakeTable.commit`): each round that lost
+    * the CAS and re-derived against refreshed metadata.
     * Observability only — the contention bench reads the delta around a
     * run; nothing branches on it. */
   val commitRetries = new java.util.concurrent.atomic.AtomicLong()

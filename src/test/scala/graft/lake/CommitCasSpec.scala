@@ -100,6 +100,69 @@ class CommitCasSpec extends SparkSpec {
     } finally CommitCas.unregister("mocks3")
   }
 
+  test("stale handle: alter, stage, rollback and rewrite_manifests retry " +
+      "through the one commit loop and count their lost CAS") {
+    CommitCas.register("mocks3", CondPut)
+    try {
+      // (op, whether its snapshot carries main's manifests forward, run it
+      // on the stale handle given the rollback target)
+      val ops: Seq[(String, Boolean, (LakeTable, Long) => Long)] = Seq(
+        ("setPartitionWidth", true, (t, _) => t.setPartitionWidth(2 * Width)),
+        ("addColumn", true, (t, _) =>
+          t.addColumn("extra", org.apache.spark.sql.types.IntegerType)),
+        ("renameColumn", true, (t, _) => t.renameColumn("data", "payload")),
+        ("stageAppend", true, (t, _) => t.stageAppend(Seq(DataFileMeta(
+          s"${t.location}/data/staged.parquet", 100L, 10L, bucket(3))), "audit")),
+        ("rollbackTo", false, (t, base) => t.rollbackTo(base)),
+        ("rewriteManifests", true, (t, _) => t.rewriteManifests()))
+      val uncounted = ops.filter { case (name, carries, op) =>
+        val loc = mockLoc(s"stale-$name")
+        LakeTable.drop(loc)
+        val t1 = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+        // two manifests before the stale load, so rewriteManifests has work
+        // on both the stale and the refreshed metadata
+        t1.append(Seq(DataFileMeta(s"$loc/data/a0.parquet", 100L, 10L, bucket(0))))
+        t1.append(Seq(DataFileMeta(s"$loc/data/a1.parquet", 100L, 10L, bucket(1))))
+        val base = t1.currentSnapshotId
+        val t2 = LakeTable.load(loc)
+        val t1File = s"$loc/data/b.parquet"
+        t1.append(Seq(DataFileMeta(t1File, 100L, 10L, bucket(2))))
+        val retriesBefore = LakeTable.commitRetries.get()
+        val id = op(t2, base)
+        val t = LakeTable.load(loc)
+        assert(id >= 0 && t.snapshots.exists(_.id == id), s"$name did not land")
+        val ids = t.snapshots.map(_.id).sorted
+        assert(ids == (ids.min to ids.max), s"$name: version chain has gaps: $ids")
+        if (carries)
+          assert(t.files(id).map(_.path).contains(t1File),
+            s"$name dropped the concurrent append's file")
+        LakeTable.commitRetries.get() - retriesBefore < 1
+      }.map(_._1)
+      assert(uncounted.isEmpty, s"lost CAS not counted for: $uncounted")
+    } finally CommitCas.unregister("mocks3")
+  }
+
+  test("retry exhaustion names the operation (append, rollbackTo)") {
+    val loc = tmpDir("cas-exhaust")
+    LakeTable.drop(loc)
+    val t1 = LakeTable.create(loc, LakeWriter.EventSchemaDdl, LakeWriter.EventSpec)
+    t1.setProperty(LakeFormat.PropCommitRetries, "1")
+    t1.append(Seq(DataFileMeta(s"$loc/data/a.parquet", 100L, 10L, bucket(0))))
+    val base = t1.currentSnapshotId
+    val ops: Seq[(String, LakeTable => Long)] = Seq(
+      "append" -> (_.append(Seq(
+        DataFileMeta(s"$loc/data/stale.parquet", 100L, 10L, bucket(0))))),
+      "rollback" -> (_.rollbackTo(base)))
+    ops.zipWithIndex.foreach { case ((name, op), i) =>
+      val t2 = LakeTable.load(loc)
+      t1.append(Seq(DataFileMeta(s"$loc/data/b$i.parquet", 100L, 10L, bucket(1))))
+      // one allowed attempt, lost to t1's commit: no retry is left
+      val e = intercept[IllegalStateException](op(t2))
+      assert(e.getMessage == s"$name failed after 1 retries")
+    }
+    LakeTable.drop(loc)
+  }
+
   test("5-way local-FS append storm: no commit lost, no committer dies " +
       "(jittered backoff defeats retry-exhaustion starvation)") {
     // The round-10 contention probe caught this for real: without
